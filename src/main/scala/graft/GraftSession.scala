@@ -130,6 +130,15 @@ object GraftSession {
       // native expressions (cosine_sim) available in SQL
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      // fork-free permission setting on the local filesystem: without
+      // libhadoop the stock one forks `chmod` for every file, `.crc`
+      // and directory it creates (3.4 ms per mkdirs, 7.0 ms per
+      // create, against 0.02 ms through java.nio) — see
+      // [[GraftRawLocalFileSystem]]. Same bits, checksums and layout;
+      // a host with libhadoop gains nothing and loses nothing.
+      .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[GraftLocalFs].getName)
 
   /** Session tuned for a concrete data dir: the initial shuffle
     * width derives from the dir's byte size (the runtime mains'
@@ -144,6 +153,16 @@ object GraftSession {
           initialPartitions: Int = 0): SparkSession = {
     val s = builder(master, shufflePartitions, initialPartitions).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // Hadoop's FileSystem cache key ignores the conf: a stock `file:`
+    // filesystem cached earlier in this JVM silently wins over
+    // fs.file.impl, and every write forks `chmod` again
+    val localFs = new org.apache.hadoop.fs.Path("file:/")
+      .getFileSystem(s.sparkContext.hadoopConfiguration).getClass
+    if (localFs != classOf[GraftLocalFileSystem])
+      org.apache.logging.log4j.LogManager.getLogger(getClass).warn(
+        s"file: filesystem is ${localFs.getName}, not " +
+          s"${classOf[GraftLocalFileSystem].getName} (one cached before " +
+          "this session won): local writes may fork chmod per file")
     // Every partition-less window in this engine is bounded by
     // construction (post-limit(√N) ANN seed ranking, ≤32-row block
     // prefix maxima, calendar-bounded run merges — see §6 of
